@@ -2,12 +2,13 @@
 no-Python plan guarantee."""
 
 import pandas as pd
+from hypothesis import HealthCheck, given, settings, strategies as st
 
 from tuatara_spark.ops import encoding
 
 
 def _decode(spark, payloads):
-    pdf = pd.DataFrame({"url": [str(i) for i in range(len(payloads))],
+    pdf = pd.DataFrame({"url": [f"{i:06d}" for i in range(len(payloads))],
                         "html": payloads})
     df = spark.createDataFrame(pdf)
     rows = encoding.sniff_decode(df).orderBy("url").collect()
@@ -98,6 +99,55 @@ def test_valid_utf16_still_decodes_exactly(spark):
                 b"\xfe\xff" + text.encode("utf-16-be")]
     got = _decode(spark, payloads)
     assert got == [("utf-16le", text), ("utf-16be", text)]
+
+
+_BOM = {"le": b"\xff\xfe", "be": b"\xfe\xff"}
+# code units biased towards the surrogate ranges and the BOM-like units
+_U16_UNIT = st.one_of(st.integers(0, 0xFFFF), st.integers(0xD800, 0xDBFF),
+                      st.integers(0xDC00, 0xDFFF),
+                      st.sampled_from([0x0000, 0xFEFF, 0xFFFE, 0xFFFF]))
+
+
+def _u16_payload(endian: str, units, tail: bytes = b"") -> bytes:
+    order = "little" if endian == "le" else "big"
+    return _BOM[endian] + b"".join(u.to_bytes(2, order) for u in units) + tail
+
+
+def _strict_u16(payload: bytes, endian: str):
+    try:
+        return payload[2:].decode(f"utf-16-{endian}")
+    except UnicodeDecodeError:
+        return None
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(st.lists(st.tuples(st.sampled_from(["le", "be"]),
+                          st.lists(_U16_UNIT, max_size=10),
+                          st.sampled_from([b"", b"\x41"])),
+                min_size=1, max_size=40))
+def test_utf16_validity_matches_strict_python_decode(spark, bodies):
+    """Valid UTF-16 decodes exactly, invalid UTF-16 (unpaired surrogate,
+    odd length) gives NULL text; Python's strict decoder is the oracle."""
+    payloads = [_u16_payload(e, units, tail) for e, units, tail in bodies]
+    want = [(f"utf-16{e}", _strict_u16(p, e))
+            for (e, _, _), p in zip(bodies, payloads)]
+    assert _decode(spark, payloads) == want
+
+
+def test_utf16_long_bodies_decode_and_session_survives(spark):
+    """A 64 KB body must not overflow the JVM regex stack (which would kill
+    the SparkContext): valid text decodes, a lone trailing surrogate NULLs."""
+    text = ("paired \U0001F600 emoji, plain text " * 1200)
+    got = []
+    for e in ("le", "be"):
+        body = text.encode(f"utf-16-{e}")
+        assert len(body) >= 64 * 1024
+        lone = (0xD83D).to_bytes(2, "little" if e == "le" else "big")
+        got += _decode(spark, [_BOM[e] + body, _BOM[e] + body + lone])
+    assert got == [("utf-16le", text), ("utf-16le", None),
+                   ("utf-16be", text), ("utf-16be", None)]
+    assert spark.range(5).count() == 5
 
 
 def test_charset_mention_in_body_text_does_not_missniff(spark):

@@ -1,5 +1,7 @@
 """IVF ANN, video frame sampling, odd-size-page robustness."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -128,7 +130,9 @@ def test_image_features_all_formats(spark, weights):
     rows = [("tpage", bytearray(fx.encode_tpage(img))),
             ("tpbit", bytearray(fx.encode_tpbit(img))),
             ("junk", bytearray(b"NOPE" + b"0" * 16))]
-    with open("/root/reference/images/rotated_text.png", "rb") as f:
+    png = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "fixtures", "png", "scan_rgb.png")
+    with open(png, "rb") as f:
         rows.append(("png", bytearray(f.read())))
     df = spark.createDataFrame(rows, "url string, html binary")
     feats = {r.url: r for r in multimodal.image_features(df).collect()}

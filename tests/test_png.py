@@ -1,6 +1,13 @@
-"""Pure-NumPy PNG decoder (ref/png.py) against the reference's own fixture
-images — the un-stubbing of S1 ingest for the reference's primary entry
-format (examples/resume.cpp:9 cv::imread of images/*.png)."""
+"""Pure-NumPy PNG decoder (ref/png.py) against document-scan PNG fixtures —
+the un-stubbing of S1 ingest for the reference's primary entry format
+(examples/resume.cpp:9 cv::imread of images/*.png).
+
+The fixtures under ``fixtures/png/`` are committed files written by this
+module's own independent encoder (``_encode_png``); regenerate them from
+the repository root with ``PYTHONPATH=. python tests/test_png.py``. Each
+one cycles all five scanline filters, splits its image data over several
+IDAT chunks and carries tEXt, pHYs and iCCP ancillary chunks, in gray, RGB
+and RGBA."""
 
 import os
 import struct
@@ -13,22 +20,60 @@ from tuatara_spark import fixtures as fx
 from tuatara_spark.ops import multimodal as mm
 from tuatara_spark.ref.png import decode_png
 
-REF_IMAGES = "/root/reference/images"
+PNG_DIR = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "fixtures", "png")
 
-EXPECTED_DIMS = {
-    "funsd_0001129658.png": (1000, 754),
-    "funsd_91372360.png": (1000, 814),
-    "resume_example.png": (763, 607),
-    "rotated_text.png": (206, 275),
-    "table_english.png": (664, 1245),
+# name → (height, width, PNG color type, ink RGB, rendered text)
+PNG_FIXTURES = {
+    "scan_gray.png": (150, 203, 0, (20, 20, 20), "Gray1Scan"),
+    "scan_rgb.png": (206, 275, 2, (30, 40, 110), "RgbPage7,Ink"),
+    "scan_rgba.png": (121, 90, 6, (90, 15, 15), "Rgba"),
 }
+EXPECTED_DIMS = {name: spec[:2] for name, spec in PNG_FIXTURES.items()}
+TEXT_PAGE = "scan_rgb.png"
+
+
+def _fixture_image(name: str) -> np.ndarray:
+    """Source pixels of a fixture: rendered glyph ink on slightly uneven
+    paper, cropped to odd dims; (H, W, C) with C = 1, 3 or 4."""
+    h, w, color_type, ink, text = PNG_FIXTURES[name]
+    page, _ = fx.render_page(text, -(-h // 4) * 4, -(-w // 4) * 4, 2)
+    mask = page[:h, :w, 0] == 0
+    y, x = np.mgrid[:h, :w]
+    paper = (232 + (3 * x + 5 * y) % 24).astype(np.uint8)[..., None]
+    img = np.where(mask[..., None], np.array(ink, np.uint8),
+                   np.repeat(paper, 3, axis=2))
+    if color_type == 0:
+        return img[..., :1]
+    if color_type == 6:  # alpha varies; the decoder must drop it
+        alpha = ((x * y) % 256).astype(np.uint8)[..., None]
+        return np.concatenate([img, alpha], axis=2)
+    return img
+
+
+def _fixture_bytes(name: str) -> bytes:
+    color_type = PNG_FIXTURES[name][2]
+    icc = b"fixture profile\x00\x00" + zlib.compress(b"not a real profile")
+    return _encode_png(
+        _fixture_image(name), color_type, idat_chunks=3,
+        ancillary=((b"tEXt", b"Comment\x00" + name.encode()),
+                   (b"pHYs", struct.pack(">IIB", 11811, 11811, 1)),
+                   (b"iCCP", icc)))
+
+
+def _read_fixture(name: str) -> bytes:
+    with open(os.path.join(PNG_DIR, name), "rb") as f:
+        return f.read()
 
 
 def _encode_png(img: np.ndarray, color_type: int = 2,
-                filter_cycle: bool = True) -> bytes:
+                filter_cycle: bool = True, idat_chunks: int = 1,
+                ancillary: tuple = ()) -> bytes:
     """Minimal independent PNG encoder for round-trip testing: exercises
     ALL five scanline filters (cycling per row) so each unfilter branch is
-    validated against an independently-written forward transform."""
+    validated against an independently-written forward transform. The
+    zlib stream is split over ``idat_chunks`` IDAT chunks, and the
+    ``ancillary`` (type, data) chunks go between IHDR and the first IDAT."""
     h, w = img.shape[:2]
     c = {0: 1, 2: 3, 6: 4}[color_type]
     flat = img.reshape(h, w * c).astype(np.int32)
@@ -61,10 +106,14 @@ def _encode_png(img: np.ndarray, color_type: int = 2,
         return struct.pack(">I", len(d)) + t + d + \
             struct.pack(">I", zlib.crc32(t + d))
 
+    step = -(-len(raw) // idat_chunks)
     return (b"\x89PNG\r\n\x1a\n"
             + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8,
                                          color_type, 0, 0, 0))
-            + chunk(b"IDAT", raw) + chunk(b"IEND", b""))
+            + b"".join(chunk(t, d) for t, d in ancillary)
+            + b"".join(chunk(b"IDAT", raw[i:i + step])
+                       for i in range(0, len(raw), step))
+            + chunk(b"IEND", b""))
 
 
 @pytest.mark.parametrize("color_type", [0, 2, 6])
@@ -83,30 +132,29 @@ def test_roundtrip_all_filters(color_type):
 
 @pytest.mark.parametrize("name", sorted(EXPECTED_DIMS))
 def test_reference_fixture_decodes(name):
-    with open(os.path.join(REF_IMAGES, name), "rb") as f:
-        img = decode_png(f.read())
+    img = decode_png(_read_fixture(name))
     h, w = EXPECTED_DIMS[name]
     assert img.shape == (h, w, 3)
     assert img.dtype == np.uint8
     # document scans are paper-dominated: bright mean, full dynamic range
     assert img.mean(dtype=np.float64) > 180
     assert img.min() < 64 and img.max() > 220
+    # exact pixels: gray widens to RGB, alpha is dropped
+    src = _fixture_image(name)
+    want = np.repeat(src, 3, axis=2) if src.shape[2] == 1 else src[..., :3]
+    np.testing.assert_array_equal(img, want)
 
 
 def test_decode_payload_dispatches_png():
-    with open(os.path.join(REF_IMAGES, "rotated_text.png"), "rb") as f:
-        buf = f.read()
-    img = fx.decode_payload(buf)
-    assert img.shape == (206, 275, 3)
+    img = fx.decode_payload(_read_fixture(TEXT_PAGE))
+    assert img.shape == EXPECTED_DIMS[TEXT_PAGE] + (3,)
 
 
 def test_extract_media_meta_real_png(spark):
-    """S1 ingest over the reference's own images through the Spark op:
-    real width/height/luma, no stub."""
-    rows = []
-    for name in sorted(EXPECTED_DIMS):
-        with open(os.path.join(REF_IMAGES, name), "rb") as f:
-            rows.append((name, bytearray(f.read())))
+    """S1 ingest over document PNGs through the Spark op: real
+    width/height/luma, no stub."""
+    rows = [(name, bytearray(_read_fixture(name)))
+            for name in sorted(EXPECTED_DIMS)]
     df = spark.createDataFrame(rows, "url string, html binary")
     meta = {r.url: r for r in mm.extract_media_meta(df).collect()}
     for name, (h, w) in EXPECTED_DIMS.items():
@@ -117,15 +165,13 @@ def test_extract_media_meta_real_png(spark):
 
 
 def test_extract_df_ingests_real_png(spark, weights):
-    """The full Spark extraction engine accepts the reference's own PNG
-    pages end-to-end (S1 ingest → detection → recognition): real decode,
-    real detection on real ink. The stand-in recognizer only knows the
-    synthetic glyph bank, so extracted TEXT is not asserted — regions and
-    error-free flow are."""
+    """The full Spark extraction engine accepts a document PNG end-to-end
+    (S1 ingest → detection → recognition): real decode, real detection on
+    real ink. The page's glyph scale and ink colour differ from the
+    recognizer's template bank, so extracted TEXT is not asserted —
+    regions and error-free flow are."""
     from tuatara_spark import engine as eng
-    with open(os.path.join(REF_IMAGES, "rotated_text.png"), "rb") as f:
-        buf = f.read()
-    df = spark.createDataFrame([("rotated_text.png", bytearray(buf))],
+    df = spark.createDataFrame([(TEXT_PAGE, bytearray(_read_fixture(TEXT_PAGE)))],
                                "url string, html binary")
     r = eng.extract_df(df, weights=weights).collect()[0]
     assert r.error is None
@@ -198,3 +244,10 @@ def test_binary_page_as_1bit_png_extracts(weights):
     assert (out == img).all()
     r = pl.extract_page(out, weights)
     assert r["text"] == "\n".join(lines)
+
+
+if __name__ == "__main__":
+    os.makedirs(PNG_DIR, exist_ok=True)
+    for fixture_name in PNG_FIXTURES:
+        with open(os.path.join(PNG_DIR, fixture_name), "wb") as out:
+            out.write(_fixture_bytes(fixture_name))

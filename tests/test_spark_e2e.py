@@ -68,16 +68,48 @@ def test_spark_skew_pages_and_determinism(spark, weights):
 def test_spark_malformed_payload_error_row(spark, weights):
     import pandas as pd
     pages = fx.make_pages(2, seed=5)
+    truncated = fx.encode_tpbit(fx.render_page("x", 128, 128, 4)[0])[:20]
+    bad_urls = {"https://bad.test/x": b"NOTATPAGE",
+                "https://bad.test/null": None,
+                "https://bad.test/truncated": truncated}
     bad = pd.DataFrame([{
-        "url": "https://bad.test/x", "warc_ts": pages["warc_ts"][0],
-        "html": b"NOTATPAGE", "text": "", "lang": "en"}])
+        "url": u, "warc_ts": pages["warc_ts"][0],
+        "html": h, "text": "", "lang": "en"} for u, h in bad_urls.items()])
     df = pd.concat([pages, bad], ignore_index=True)
     rows = {r.url: r for r in
             eng.extract_df(spark.createDataFrame(df), weights=weights).collect()}
-    assert rows["https://bad.test/x"].error is not None
-    assert rows["https://bad.test/x"].spans is None
-    ok = [r for u, r in rows.items() if u != "https://bad.test/x"]
-    assert all(r.error is None for r in ok)
+    for u in bad_urls:
+        assert rows[u].error.startswith("decode: "), rows[u].error
+        assert rows[u].spans is None
+    assert rows["https://bad.test/null"].error == "decode: null payload"
+    ok = [r for u, r in rows.items() if u not in bad_urls]
+    assert len(ok) == 2 and all(r.error is None for r in ok)
+
+
+def test_decode_payloads_matches_per_row_decode():
+    """The batched decoder agrees with per-row decode_payload on every
+    element of a mixed list: the same image, or an error exactly when the
+    per-row call raises."""
+    from tuatara_spark.ref.png import encode_png
+    a, _ = fx.render_page("A", 128, 128, 4)
+    b, _ = fx.render_page("Cd", 128, 192, 4)
+    bufs = [fx.encode_tpbit(a), fx.encode_tpbit(b), fx.encode_tpbit(b)[:-3],
+            fx.encode_tpage(a), encode_png(b), None, b"ZZZZ\x01\x00\x01\x00",
+            bytearray(fx.encode_tpbit(a)), fx.encode_tpbit(b)]
+    images, errors = fx.decode_payloads(bufs)
+    assert len(images) == len(errors) == len(bufs)
+    for buf, img, err in zip(bufs, images, errors):
+        if buf is None:
+            assert img is None and err == "decode: null payload"
+            continue
+        try:
+            want = fx.decode_payload(buf)
+        except Exception as e:
+            assert img is None and err == f"decode: {e}"
+        else:
+            assert err is None
+            np.testing.assert_array_equal(img, want)
+    assert sum(e is not None for e in errors) == 3
 
 
 def test_tpbit_roundtrip_byte_identical():

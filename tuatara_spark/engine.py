@@ -3,11 +3,15 @@
 The reference engine is one C-level function per image
 (tuatara.h:13 ``image_to_data``); here the whole pipeline runs inside
 ``DataFrame.mapInArrow`` over Arrow record batches — no per-row Python in
-the hot path (input_hint requirement): pages in a batch are decoded,
-grouped by shape, and pushed through the detection conv stack as stacked
-tensors; ALL region crops of the batch go through recognition as a single
-matmul (strictly more vectorized than the reference's chunk-of-4 +
-6-thread pool, tuatara.cpp:450-475, which Spark task parallelism replaces).
+the hot path (input_hint requirement). Per record batch, each step runs
+once and batched: ``fixtures.decode_payloads`` (one stacked TPBIT unpack
+per page shape), ``ref.pipeline.detect_pages`` (one stacked detection
+forward per page shape), then ``ref.pipeline.recognize_pages`` (ALL region
+crops of the batch through recognition as a single matmul — strictly more
+vectorized than the reference's chunk-of-4 + 6-thread pool,
+tuatara.cpp:450-475, which Spark task parallelism replaces). This module
+owns only the row bookkeeping: decode and detect failures become error
+rows, never failed tasks.
 
 Model weights are broadcast once per job and rehydrated once per worker
 (``Broadcast.value`` caches) — fixing the reference's per-call weight
@@ -22,7 +26,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, FloatType, IntegerType, StringType,
@@ -30,7 +33,6 @@ from pyspark.sql.types import (ArrayType, FloatType, IntegerType, StringType,
 
 from tuatara_spark import fixtures as fx
 from tuatara_spark import weights as wt
-from tuatara_spark.ref import geometry as g
 from tuatara_spark.ref import pipeline as pl
 
 SPANS_TYPE = ArrayType(StructType([
@@ -74,48 +76,10 @@ def make_extractor(weights_bc, passthrough: list[str]):
                           else weights_bc)
             n = batch.num_rows
             htmls = batch.column("html")
-            images: list = [None] * n
-            errors: list = [None] * n
-            # Payload decode, batched: same-shape TPBIT payloads unpack in
-            # ONE stacked unpackbits per group instead of one call per page
-            # (this was the last per-row Python loop on the hot path).
-            # Payload bytes are read as zero-copy Arrow buffer views, not
-            # .as_py() copies. Mixed/malformed rows fall back to the
-            # per-row decoder; a poison page becomes an error row.
-            tpbit: dict[tuple[int, int], list[tuple[int, memoryview]]] = {}
-            for i in range(n):
-                sc = htmls[i]
-                if not sc.is_valid:
-                    errors[i] = "decode: null payload"
-                    continue
-                mv = memoryview(sc.as_buffer())
-                try:
-                    if bytes(mv[:4]) == fx.TPBIT_MAGIC and len(mv) >= 8:
-                        h = int.from_bytes(mv[4:6], "little")
-                        w = int.from_bytes(mv[6:8], "little")
-                        if len(mv) >= 8 + (h * w + 7) // 8:
-                            tpbit.setdefault((h, w), []).append((i, mv))
-                            continue
-                    images[i] = fx.decode_payload(mv)
-                except Exception as e:  # malformed payload → error row
-                    errors[i] = f"decode: {e}"
-            for (h, w), grp in tpbit.items():
-                try:
-                    nb = (h * w + 7) // 8
-                    packed = np.stack([
-                        np.frombuffer(m, np.uint8, count=nb, offset=8)
-                        for _, m in grp])
-                    planes = ((np.unpackbits(packed, axis=1, count=h * w)
-                               ^ 1) * np.uint8(255)).reshape(len(grp), h, w)
-                    for j, (i, _) in enumerate(grp):
-                        images[i] = np.broadcast_to(
-                            planes[j][:, :, None], (h, w, 3))
-                except Exception:
-                    for i, m in grp:  # per-row fallback, row-level errors
-                        try:
-                            images[i] = fx.decode_payload(m)
-                        except Exception as e:
-                            errors[i] = f"decode: {e}"
+            # payload bytes are zero-copy Arrow buffer views; a poison page
+            # becomes an error row
+            images, errors = fx.decode_payloads(
+                [sc.as_buffer() if sc.is_valid else None for sc in htmls])
             ok_idx = [i for i in range(n) if errors[i] is None]
 
             # detection, batched by page shape; if the batch path throws
@@ -137,28 +101,13 @@ def make_extractor(weights_bc, passthrough: list[str]):
 
             det_all = _detect(ok_idx) if ok_idx else []
             det = [(i, d) for i, d in zip(ok_idx, det_all) if d is not None]
-            # recognition: ALL crops of the record batch in one forward pass
-            crops_flat: list[np.ndarray] = []
-            crop_counts: list[int] = []
-            for _i, (boxes, swapped) in det:
-                crops = pl.crop_regions(swapped, boxes)
-                crops_flat.extend(crops)
-                crop_counts.append(len(crops))
-            texts_flat = pl.recognize_ink(
-                params, pl.crops_to_ink(crops_flat, params))
+            pages = pl.recognize_pages([d for _, d in det], params)
 
             spans_col: list = [None] * n
             text_col: list = [None] * n
             nreg_col: list = [0] * n
             nchar_col: list = [0] * n
-            pos = 0
-            for (i, (boxes, _)), cnt in zip(det, crop_counts):
-                texts = texts_flat[pos:pos + cnt]
-                pos += cnt
-                spans = [{"text": t,
-                          "bbox": g.rect_to_tesseract_bbox(b).tolist()}
-                         for t, b in zip(texts, boxes)]
-                full = pl.assemble_reading_order(spans)
+            for (i, _), (spans, full) in zip(det, pages):
                 spans_col[i] = spans
                 text_col[i] = full
                 nreg_col[i] = len(spans)

@@ -141,12 +141,18 @@ def decode_tpbit(buf: bytes) -> np.ndarray:
     w = int.from_bytes(buf[6:8], "little")
     packed = np.frombuffer(buf, dtype=np.uint8, offset=8,
                            count=(h * w + 7) // 8)
-    # bit=1 → INK(0), bit=0 → PAPER(255); channel axis is a stride-0
-    # broadcast view (read-only, like decode_tpage's frombuffer) so the
-    # widening writes h*w bytes, not h*w*3 — the pipeline only reads pages
-    plane = ((np.unpackbits(packed, count=h * w) ^ 1)
-             * np.uint8(255)).reshape(h, w)
-    return np.broadcast_to(plane[:, :, None], (h, w, 3))
+    return _tpbit_pages(packed[None], h, w)[0]
+
+
+def _tpbit_pages(packed: np.ndarray, h: int, w: int) -> np.ndarray:
+    """(K, ceil(h*w/8)) packed TPBIT planes → (K, h, w, 3) uint8 pages in
+    ONE ``unpackbits``: bit=1 → INK(0), bit=0 → PAPER(255). The channel
+    axis is a stride-0 broadcast view (read-only, like decode_tpage's
+    frombuffer) so the widening writes h*w bytes per page, not h*w*3 —
+    the pipeline only reads pages."""
+    planes = ((np.unpackbits(packed, axis=1, count=h * w) ^ 1)
+              * np.uint8(255)).reshape(len(packed), h, w)
+    return np.broadcast_to(planes[..., None], (len(packed), h, w, 3))
 
 
 def decode_payload(buf: bytes) -> np.ndarray:
@@ -180,6 +186,53 @@ def decode_payload(buf: bytes) -> np.ndarray:
         from tuatara_spark.ref.tiff import decode_tiff
         return decode_tiff(buf)
     raise ValueError(f"unknown page payload magic {magic!r}")
+
+
+def decode_payloads(bufs) -> tuple[list, list]:
+    """Decode a sequence of payload buffers (buffer-likes or ``None``);
+    returns ``(images, errors)``, both the length and order of ``bufs``.
+
+    Same-shape TPBIT payloads unpack in ONE stacked ``unpackbits`` per
+    shape group instead of one call per page; payloads are read through
+    zero-copy memoryviews. Every other payload, and any TPBIT group the
+    stacked path cannot handle, goes through :func:`decode_payload` per
+    row. A row that fails has ``images[i] is None`` and ``errors[i]`` set
+    to ``"decode: null payload"`` or ``"decode: <exception>"``."""
+    n = len(bufs)
+    images: list = [None] * n
+    errors: list = [None] * n
+
+    def one(i, mv):
+        try:
+            images[i] = decode_payload(mv)
+        except Exception as e:  # malformed payload → error row
+            errors[i] = f"decode: {e}"
+
+    tpbit: dict[tuple[int, int], list[tuple[int, memoryview]]] = {}
+    for i, b in enumerate(bufs):
+        if b is None:
+            errors[i] = "decode: null payload"
+            continue
+        mv = memoryview(b)
+        if bytes(mv[:4]) == TPBIT_MAGIC and len(mv) >= 8:
+            h = int.from_bytes(mv[4:6], "little")
+            w = int.from_bytes(mv[6:8], "little")
+            if len(mv) >= 8 + (h * w + 7) // 8:
+                tpbit.setdefault((h, w), []).append((i, mv))
+                continue
+        one(i, mv)
+    for (h, w), grp in tpbit.items():
+        try:
+            nb = (h * w + 7) // 8
+            pages = _tpbit_pages(np.stack([
+                np.frombuffer(m, np.uint8, count=nb, offset=8)
+                for _, m in grp]), h, w)
+            for j, (i, _) in enumerate(grp):
+                images[i] = pages[j]
+        except Exception:
+            for i, m in grp:
+                one(i, m)
+    return images, errors
 
 
 def pages_to_parquet(df: pd.DataFrame, path: str) -> None:

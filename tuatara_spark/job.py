@@ -62,10 +62,9 @@ def run_extract(spark: SparkSession, input_path: str, output_root: str,
     cat.pin_table_config(num_buckets=int(num_buckets),
                          weights_seed=int(weights_seed))
     done = cat.committed_buckets()
-    if num_tasks is None:
-        num_tasks = spark.sparkContext.defaultParallelism * 2
 
     pages = spark.read.parquet(input_path)
+    num_tasks = pt.wide(pages, num_tasks)
     pages = pt.with_bucket(pages, num_buckets)
     remaining = sorted(set(range(num_buckets)) - done)
     if not remaining:
@@ -155,10 +154,9 @@ def run_crawl(spark: SparkSession, input_dir: str, output_root: str,
     cur_gen = cat.current_gen()
     gen = cur_gen + 1 if refresh else cur_gen
     done = set() if refresh else cat.committed_buckets(gen=gen)
-    if num_tasks is None:
-        num_tasks = spark.sparkContext.defaultParallelism * 2
 
     recs = W.read_warc(spark, input_dir).where(F.col("error") == "")
+    num_tasks = pt.wide(recs, num_tasks)
     decoded = encoding.sniff_decode(recs)
     stripped = htmlx.strip_boilerplate(decoded, col="text")
     pages = pt.with_bucket(stripped, num_buckets)

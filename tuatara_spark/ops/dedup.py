@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from tuatara_spark import partitioning as pt
 
 _LIVE_CACHES: list = []
 
@@ -46,16 +47,6 @@ def release_caches() -> int:
         _LIVE_CACHES.pop().unpersist()
         n += 1
     return n
-
-
-def _wide(df: DataFrame, requested: int | None) -> int:
-    """Partition width for CPU-heavy stages: 2× the session's
-    defaultParallelism unless explicitly requested. A hardcoded count would
-    become the stage-width ceiling on a real cluster (the sandbox's 64 is
-    just 2×32 local threads)."""
-    if requested is not None:
-        return requested
-    return df.sparkSession.sparkContext.defaultParallelism * 2
 
 
 # ---------------------------------------------------------------- exact ----
@@ -108,7 +99,7 @@ def shingle_tokens(df: DataFrame, text_col: str, id_col: str, k: int,
     (_id,_g) dedup), so the EXPLODED gram table never reshuffles — only
     narrow doc rows move. Skew is unchanged: a row's explode is always
     generated inside one task either way."""
-    base = (df.repartition(_wide(df, compute_partitions), F.col(id_col))
+    base = (df.repartition(pt.wide(df, compute_partitions), F.col(id_col))
             .select(F.col(id_col).alias("_id"),
                     F.lower(F.col(text_col)).alias("_lc")))
     pos = F.explode(F.expr(
@@ -224,7 +215,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     cand = (left.join(right, ["band_idx", "band_hash"])
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b")
-            .repartition(_wide(df, verify_partitions), "id_a", "id_b")
+            .repartition(pt.wide(df, verify_partitions), "id_a", "id_b")
             .dropDuplicates())
     sh = sig.select("_id", "shingles", F.size("shingles").alias("_ns"))
     cand = (cand
@@ -276,7 +267,7 @@ def _simhash_sigs(df: DataFrame, text_col: str = "text",
     output). Skew is unchanged by the keying: a row's explode is always
     generated inside one task in either formulation.
     """
-    tok = df.repartition(_wide(df, compute_partitions),
+    tok = df.repartition(pt.wide(df, compute_partitions),
                          F.col(id_col)).select(
         F.col(id_col),
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
@@ -417,7 +408,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     bucket cap — dropping a bucket would break exactness; the frequency
     order IS the skew control.
     """
-    vp = _wide(df, verify_partitions)
+    vp = pt.wide(df, verify_partitions)
     # compiled token stream → per-doc distinct grams; one shuffle builds
     # both the dedup'd token table and the gram arrays for verification
     tok = _persist(shingle_tokens(df, text_col, id_col, k, vp)
@@ -488,7 +479,7 @@ def segment_dedup(df: DataFrame, text_col: str = "text",
     # partitioning. Guard: sequence(0, -1) would step DOWN, hence the
     # size > 0 filter before the explode (empty docs emit no segment
     # row, exactly as the old empty-array branch).
-    pre = (df.repartition(_wide(df, None), F.col(id_col))
+    pre = (df.repartition(pt.wide(df), F.col(id_col))
            .select(F.col(id_col), toks.alias("_tk"), nseg.alias("_ns"))
            .where(F.size("_tk") > 0))
     exploded = (pre.select(
@@ -579,7 +570,7 @@ def _substr_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     repartition (shingle_tokens pattern): narrow doc rows move once,
     the tokenize + shingle explode + hash run at full width even off a
     one-row-group scan."""
-    return df.repartition(_wide(df, None), F.col(id_col)).select(
+    return df.repartition(pt.wide(df), F.col(id_col)).select(
         F.col(id_col).alias("_id"),
         F.expr(rf"filter(split(trim({text_col}), '\\s+'), "
                "x -> x != '')").alias("_toks"))
@@ -791,7 +782,7 @@ def cross_corpus_jaccard_pairs(old: DataFrame, new: DataFrame,
     batch shuffles only its prefix rows against it. Verification joins
     gram sets per candidate on the id keys; no cartesian anywhere.
     """
-    vp = _wide(new, verify_partitions)
+    vp = pt.wide(new, verify_partitions)
     tok_old = _persist(shingle_tokens(old, text_col, id_col, k, vp)
                        .select("_id", F.col("_s").alias("_g"))
                        .dropDuplicates(["_id", "_g"]))

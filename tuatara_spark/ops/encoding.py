@@ -63,13 +63,19 @@ _CP1252_DST = bytes(b for b in range(0x80, 0xA0)
 # Spark 4's decode() THROWS on malformed input (MALFORMED_CHARACTER_CODING)
 # — at 10^12 rows one broken page must not kill a task, so every branch
 # below is total: UTF-8 goes through make_valid_utf8 (U+FFFD repair),
-# Latin-1/cp1252 accept every byte, and UTF-16 is pre-validated with a
-# surrogate-pairing regex over the hex view (invalid rows → NULL text, the
-# explicit undecodable signal). The hex doubling only costs on the rare
-# UTF-16 rows — the branch is lazy per row.
-_U16_UNIT = "(?:[0-9A-CE-F][0-9A-F]|D[0-7])"
-_VALID_U16LE = f"^(?:..{_U16_UNIT}|..D[89AB]..D[C-F])*$"
-_VALID_U16BE = f"^(?:{_U16_UNIT}..|D[89AB]..D[C-F]..)*$"
+# Latin-1/cp1252 accept every byte, and UTF-16 is pre-validated over the
+# hex view (invalid rows → NULL text, the explicit undecodable signal).
+# The check must not be one repeated group over the whole body: Java's
+# regex engine recurses per repetition of a quantified alternation, and a
+# 2 KB body overflows the JVM stack and kills the SparkContext. Instead
+# the body's hex is cut into 4-hex-digit code units, each followed by a
+# ',', and the check SEARCHES for an unpaired surrogate — a high surrogate
+# (D800–DBFF) not followed by a low one (DC00–DFFF), or a low one not
+# preceded by a high one. Every pattern is bounded, so the body length
+# does not matter. The hex doubling only costs on the rare UTF-16 rows —
+# the branch is lazy per row.
+_BAD_U16LE = "..D[89AB],(?!..D[C-F],)|(?:^|(?<!D[89AB]),)..D[C-F],"
+_BAD_U16BE = "D[89AB]..,(?!D[C-F]..,)|(?:^|(?<!D[89AB]..),)D[C-F]..,"
 
 
 def decoded_col(bin_col: str, cs: F.Column) -> F.Column:
@@ -81,10 +87,11 @@ def decoded_col(bin_col: str, cs: F.Column) -> F.Column:
     c = F.col(bin_col)
     utf8 = F.make_valid_utf8(c.cast("string"))
     utf8_bom = F.make_valid_utf8(F.substring(c, 4, _MAX).cast("string"))
-    body_hex = F.hex(F.substring(c, 3, _MAX))  # after the 2-byte BOM
-    u16_ok = (F.length(c) % 2 == 0) & F.when(
-        cs == UTF16LE, body_hex.rlike(_VALID_U16LE)).otherwise(
-        body_hex.rlike(_VALID_U16BE))
+    units = F.regexp_replace(F.hex(F.substring(c, 3, _MAX)),  # after BOM
+                             "(....)", "$1,")
+    u16_ok = (F.length(c) % 2 == 0) & ~F.when(
+        cs == UTF16LE, units.rlike(_BAD_U16LE)).otherwise(
+        units.rlike(_BAD_U16BE))
     utf16 = F.when(u16_ok, F.decode(c, "UTF-16")).otherwise(F.lit(None))
     return (
         F.when(cs == UTF8_BOM, utf8_bom)

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from tuatara_spark import partitioning as pt
+
 # Block-level containers whose CONTENT is boilerplate (strip whole block),
 # in the order applied. Non-greedy, dot-matches-newline, case-insensitive
 # — identical semantics in Java regex (Spark) and RE2 (DuckDB).
@@ -199,9 +201,8 @@ def _scored_blocks(df: DataFrame, col: str, key_col: str,
     key — hashpartitioning(key) satisfies their distribution — so NO
     additional exchange appears: same single keyed shuffle as before,
     moved ahead of the heavy work instead of after it."""
-    from tuatara_spark.ops.dedup import _wide
     blocks = F.split(F.col(col), r"(?i)</(?:p|div|td|li|article|section)>")
-    exploded = (df.repartition(_wide(df, None), F.col(key_col))
+    exploded = (df.repartition(pt.wide(df), F.col(key_col))
                 .select(F.col(key_col),
                         F.posexplode(blocks).alias("block_idx", "_raw")))
     txt = F.col("_raw")

@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from tuatara_spark import partitioning as pt
+
 PROB_SCALE = 10 ** 6
 N_TIERS = 3
 
@@ -78,8 +80,7 @@ def train_bigram_lm(df: DataFrame, text_col: str = "text",
     explode saves — so the default is off; the char-gram ops, ~6× the
     rows, measure the other way and repartition unconditionally)."""
     if repartition_input:
-        from tuatara_spark.ops.dedup import _wide
-        df = df.repartition(_wide(df, None))
+        df = df.repartition(pt.wide(df))
     pairs = (_bigrams(df, text_col, id_col)
              .groupBy("w1", "w2")
              .agg(F.count("*").alias("pair_count")))
@@ -115,8 +116,7 @@ def score_bigram_lm(df: DataFrame, lm: DataFrame,
     extra exchange costs more than it saves (measured 1.2 → 1.7 s);
     the knob exists for corpora whose documents are large."""
     if repartition_input:
-        from tuatara_spark.ops.dedup import _wide
-        df = df.repartition(_wide(df, None), F.col(id_col))
+        df = df.repartition(pt.wide(df), F.col(id_col))
     bg = _bigrams(df, text_col, id_col)
     l = F.broadcast(lm) if broadcast else lm
     j = bg.join(l, ["w1", "w2"], "left")
@@ -229,8 +229,7 @@ def score_kn_bigram_lm(df: DataFrame, model, text_col: str = "text",
     b = (lambda d: F.broadcast(d)) if broadcast else (lambda d: d)
     t_df = pairs.agg(F.count("*").alias("_T"))
     if repartition_input:
-        from tuatara_spark.ops.dedup import _wide
-        df = df.repartition(_wide(df, None), F.col(id_col))
+        df = df.repartition(pt.wide(df), F.col(id_col))
     bg = _bigrams(df, text_col, id_col)
     j = (bg.join(b(pairs), ["w1", "w2"], "left")
          .join(b(lefts), ["w1"], "left")

@@ -40,6 +40,8 @@ from __future__ import annotations
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
 from pyspark.sql import DataFrame, functions as F
 
+from tuatara_spark import partitioning as pt
+
 IDF_SCALE = 10 ** 6
 
 
@@ -103,11 +105,10 @@ def inverted_index(df: DataFrame, text_col: str = "text",
     token rows. The final per-term gather moves exactly the postings
     content — the index itself — and nothing else.
     """
-    from tuatara_spark.ops.dedup import _wide
     # id-keyed widening repartition (shingle_tokens pattern): the
     # tokenize + position explode and the (term, doc) partial
     # aggregation run at full width even off a one-row-group scan
-    toks = df.repartition(_wide(df, None), F.col(id_col)).select(
+    toks = df.repartition(pt.wide(df), F.col(id_col)).select(
         F.col(id_col).alias("_id"),
         F.posexplode(F.expr(
             rf"filter(split(lower(trim({text_col})), '\\s+'), "

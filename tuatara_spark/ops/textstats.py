@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from tuatara_spark import partitioning as pt
+
 LANG_MARKERS = {
     "en": [" the ", " and "],
     "es": [" el ", " la "],
@@ -367,8 +369,7 @@ def gopher_repetition(df: DataFrame, text_col: str = "text",
     reshuffle; the final assembly joins are all on the id. No Python,
     no floats, no cross-document state.
     """
-    wide = df.sparkSession.sparkContext.defaultParallelism * 2
-    ids = (df.repartition(wide, F.col(id_col))
+    ids = (df.repartition(pt.wide(df), F.col(id_col))
            .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t")))
 
     def dup_stats(sep: str, prefix: str) -> DataFrame:
@@ -488,8 +489,7 @@ def dup_ngram_coverage(df: DataFrame, n: int = 5,
     repartition nothing reshuffles; the explode fan-out is bounded by
     n × duplicated-gram occurrences."""
     from pyspark.sql import Window
-    wide = df.sparkSession.sparkContext.defaultParallelism * 2
-    tok = (df.repartition(wide, F.col(id_col))
+    tok = (df.repartition(pt.wide(df), F.col(id_col))
            .select(F.col(id_col).alias("_id"), F.posexplode(F.expr(
                rf"filter(split(lower(trim({text_col})), '\\s+'), "
                "x -> x != '')")).alias("_p", "_w")))
@@ -773,8 +773,7 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     built the per-doc hash array with an interpreted lambda and
     exploded one full-array-referencing row per window: the
     interpreted md5 transform alone was ~93% of its runtime.)"""
-    spark_parallelism = df.sparkSession.sparkContext.defaultParallelism
-    pre = (df.repartition(2 * spark_parallelism, F.col(id_col))
+    pre = (df.repartition(pt.wide(df), F.col(id_col))
            .select(F.col(id_col),
                    F.lower(F.col(text_col)).alias("_lc"))
            .withColumn("_m", F.expr(f"greatest(length(_lc) - {k} + 1, 1)")))

@@ -64,11 +64,11 @@ def distribute(df: DataFrame, num_tasks: int) -> DataFrame:
     return df.repartition(num_tasks, F.col("part_id"), F.col("salt"))
 
 
-def partition_histogram(df: DataFrame) -> DataFrame:
-    """Diagnostic: per physical partition, row count and payload bytes —
-    used by skew tests and ops. Stays in the JVM (spark_partition_id)."""
-    return (df.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid")
-            .agg(F.count("*").alias("rows"),
-                 F.sum(F.length("html")).alias("bytes"))
-            .orderBy("pid"))
+def wide(df: DataFrame, requested: int | None = None) -> int:
+    """Partition width for CPU-heavy stages: 2× the session's
+    defaultParallelism unless explicitly requested. A hardcoded count would
+    become the stage-width ceiling on a real cluster (the sandbox's 64 is
+    just 2×32 local threads)."""
+    if requested is not None:
+        return requested
+    return df.sparkSession.sparkContext.defaultParallelism * 2

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tuatara_spark import fixtures as fx
+from tuatara_spark import partitioning as pt
 from tuatara_spark import weights as wt
 from tuatara_spark.ops import dedup, multimodal, similarity, textstats
 from tuatara_spark.ref import pipeline as pl
@@ -104,8 +105,7 @@ def _range_by(df: DataFrame, key: str = "doc_id") -> DataFrame:
     are identical: range partitions are ordered, so
     range-partition → project → sortWithinPartitions IS orderBy's own
     execution strategy with the exchange moved below the projection."""
-    n = df.sparkSession.sparkContext.defaultParallelism * 2
-    return df.repartitionByRange(n, F.col(key))
+    return df.repartitionByRange(pt.wide(df), F.col(key))
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -120,32 +120,19 @@ def _render_extract_fn(weights_bc, page_hook=None):
     """``page_hook`` (optional, picklable) transforms each rendered page
     before extraction — e.g. a lossy codec round trip for ingest gates."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from tuatara_spark.ref import geometry as g
         params = weights_bc.value if hasattr(weights_bc, "value") else weights_bc
         for pdf in batches:
             # render per row (synthesis is inherently per-page), then run
-            # the engine's shape-grouped batched kernel: ONE stacked
-            # detection forward for the whole pandas batch (all pages are
-            # 256²) and ONE recognition matmul over all crops — identical
-            # output to per-page extract_page, measured ~2× faster.
+            # the engine's batched kernels: ONE stacked detection forward
+            # for the whole pandas batch (all pages are 256²) and ONE
+            # recognition matmul over all crops — identical output to
+            # per-page extract_page.
             images = [fx.render_page(t or "", 256, 256, 4)[0]
                       for t in pdf["t"]]
             if page_hook is not None:
                 images = [page_hook(im) for im in images]
-            det = pl.detect_pages(images, params)
-            crops_flat, counts = [], []
-            for boxes, swapped in det:
-                crops = pl.crop_regions(swapped, boxes)
-                crops_flat.extend(crops)
-                counts.append(len(crops))
-            texts_flat = pl.recognize_ink(
-                params, pl.crops_to_ink(crops_flat, params))
-            texts, pos = [], 0
-            for (boxes, _), cnt in zip(det, counts):
-                spans = [{"text": t, "bbox": g.rect_to_tesseract_bbox(b)}
-                         for t, b in zip(texts_flat[pos:pos + cnt], boxes)]
-                pos += cnt
-                texts.append(pl.assemble_reading_order(spans))
+            texts = [text for _, text in pl.recognize_pages(
+                pl.detect_pages(images, params), params)]
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "text": texts})
     return fn
 

@@ -5,12 +5,13 @@ PARSEQ (recognition; tuatara.cpp:421-432) weights from disk. Those weights
 are not redistributable/available offline, so this module provides
 *constructed deterministic* models with the same interface contracts:
 
-* detection: (N, 3, H, W) float32 in [0,1] → (N, H/2, W/2, 2) score maps,
+* detection: (N, H, W, 3) uint8 pages → (N, H/2, W/2, 2) score maps,
   channel 0 = text score, channel 1 = link score (tuatara.cpp:393-394).
   Implemented as a conv stack: a 1x1 channel-mix ("ink") conv, a 2x2
   average-pool downsample, and two smoothing conv kernels (5x5 binomial for
   text, 3x7 horizontal for link).
-* recognition: (R, 3, 32, 128) float32 → (R, L=26, C=98) logits.
+* recognition: (R, 32, 128) ink maps of the resized crops → (R, L=26,
+  C=98) logits.
   CRNN-shaped: a 1x1 ink conv, then a full-receptive-field conv layer whose
   95 filters are glyph templates (built by tuatara_spark.weights through the
   real detection+crop path), correlated against the input and emitted as
@@ -61,20 +62,13 @@ def conv2d_same(x: np.ndarray, k: np.ndarray) -> np.ndarray:
     return out
 
 
-def ink_map(tensors: np.ndarray, ink_w: np.ndarray) -> np.ndarray:
-    """(N, 3, H, W) [0,1] → (N, H, W) 'ink' (1 - channel mix). Symmetric
-    channel weights make this invariant to the reference's BGR/RGB swaps
-    (quirk Q3) while keeping the swap stages themselves in the pipeline."""
-    mixed = (tensors[:, 0] * ink_w[0] + tensors[:, 1] * ink_w[1]
-             + tensors[:, 2] * ink_w[2])
-    return (np.float32(1.0) - mixed).astype(np.float32)
-
-
 def ink_map_u8(imgs: np.ndarray, ink_w: np.ndarray) -> np.ndarray:
-    """Fused S4+channel-mix: (N, H, W, 3) uint8 → (N, H, W) float32 ink,
-    skipping the full NCHW float tensor (the 1x1 ink conv commutes with
-    the ÷255 normalize). Pipeline-internal fast path; the reference-shaped
-    ``to_tensor`` + ``ink_map`` stages remain for stage parity/tests."""
+    """Fused S4+channel-mix: (N, H, W, 3) uint8 → (N, H, W) float32 'ink'
+    (1 - channel mix), skipping the NCHW float tensor (the 1x1 ink conv
+    commutes with the ÷255 normalize). Symmetric channel weights make this
+    invariant to the reference's BGR/RGB swaps (quirk Q3) while keeping the
+    swap stages themselves in the pipeline. The one ink path of detection
+    (detect_forward_u8) and recognition (pipeline.crops_to_ink)."""
     mixed = (imgs[..., 0] * ink_w[0] + imgs[..., 1] * ink_w[1]
              + imgs[..., 2] * ink_w[2])
     return (np.float32(1.0) - mixed / np.float32(255.0)).astype(np.float32)
@@ -87,12 +81,6 @@ def _detect_from_ink(params: dict, ink: np.ndarray) -> np.ndarray:
     text = conv2d_same(half, params["k_text"])
     link = conv2d_same(half, params["k_link"])
     return np.stack([text, link], axis=-1)
-
-
-def detect_forward(params: dict, tensors: np.ndarray) -> np.ndarray:
-    """Detection forward pass: (N, 3, H, W) → (N, H/2, W/2, 2); H, W must be
-    even (guaranteed by pad-to-32, tuatara.cpp:225-229)."""
-    return _detect_from_ink(params, ink_map(tensors, params["ink_w"]))
 
 
 def detect_forward_u8(params: dict, imgs: np.ndarray,
@@ -129,15 +117,11 @@ def features_from_ink(ink: np.ndarray) -> np.ndarray:
     return (f / (norms + np.float32(1e-6))).astype(np.float32)
 
 
-def ink_features(params: dict, crops: np.ndarray) -> np.ndarray:
-    """(R, 3, 32, 128) float32 crops → feature vectors (reference-shaped
-    tensor API; the pipeline's fast path feeds features_from_ink from
-    uint8 crops directly)."""
-    return features_from_ink(ink_map(crops, params["ink_w"]))
-
-
 def logits_from_features(params: dict, f: np.ndarray) -> np.ndarray:
-    """(R, 32*128) features → (R, 26, 98) logits."""
+    """(R, 32*128) features → (R, 26, 98) logits. ``params`` carries
+    'templates' (95, 32*128) L2-normalized zero-mean template filters
+    (charset order — class id = 1 + charset index, matching the
+    tokenizer's first-occurrence mapping), 'gain', and 'eos_bias'."""
     r = f.shape[0]
     gain = np.float32(params["gain"])
     logits = np.full((r, SEQ_LEN, cs.NUM_CLASSES), -gain, dtype=np.float32)
@@ -153,15 +137,3 @@ def logits_from_features(params: dict, f: np.ndarray) -> np.ndarray:
     logits[:, 0, 0] = gain * np.maximum(np.float32(params["eos_bias"]),
                                         eos_corr.astype(np.float32))
     return logits
-
-
-def recognize_forward(params: dict, crops: np.ndarray) -> np.ndarray:
-    """Recognition forward pass: (R, 3, 32, 128) float32 → (R, 26, 98)
-    logits. ``params`` carries 'templates' (95, 32*128) L2-normalized
-    zero-mean template filters (charset order — class id = 1 + charset
-    index, matching the tokenizer's first-occurrence mapping), 'gain', and
-    'eos_bias'."""
-    if crops.shape[0] == 0:
-        return logits_from_features(params, np.zeros((0, REC_H * REC_W),
-                                                     dtype=np.float32))
-    return logits_from_features(params, ink_features(params, crops))

@@ -8,7 +8,8 @@ and the Spark Arrow UDF (tuatara_spark.engine). Per-image flow:
   swap channels (S2) → aspect resize + pad-to-32 (S3) → tensorize (S4) →
   detection forward (S5) → get_detected_boxes (S6-S16) → rescale (S17) →
   crop (S18) → crop resize + swap + tensorize (S19/S2/S4) → recognition
-  forward (S20-S23; region batching is the caller's concern) → softmax →
+  forward (S20-S23; recognize_pages batches all regions of a page batch) →
+  softmax →
   greedy decode + EOS truncation (S24-S25) → bbox formatting (S26-S27) →
   reading-order assembly (S28, bindings/run_ocr.py:12).
 """
@@ -90,17 +91,6 @@ def crop_regions(swapped_image: np.ndarray, boxes) -> list[np.ndarray]:
     return crops
 
 
-def crops_to_tensors(crops: list[np.ndarray]) -> np.ndarray:
-    """S19 + S2 + S4 per crop (tuatara.cpp:437-448): resize to 128x32,
-    channel swap, tensorize. Returns (R, 3, 32, 128) float32.
-    (Reference-shaped API; the pipeline's hot path is crops_to_ink.)"""
-    if not crops:
-        return np.zeros((0, 3, md.REC_H, md.REC_W), dtype=np.float32)
-    ts = [rz.to_tensor(rz.swap_channels(
-        rz.resize_bilinear(c, md.REC_W, md.REC_H))) for c in crops]
-    return np.stack(ts)
-
-
 def crops_to_ink(crops: list[np.ndarray], params: dict) -> np.ndarray:
     """Fused S19+S2+S4+ink: resize crops (batched per source shape —
     identical sampling math, vectorized), one ink-map pass.
@@ -126,13 +116,6 @@ def recognize_ink(params: dict, ink: np.ndarray) -> list[str]:
     logits = md.logits_from_features(params, md.features_from_ink(ink))
     probs = cs.softmax(logits)                             # cpp:486
     return cs.decode_probs(probs)                          # cpp:493-505
-
-
-def recognize_tensors(params: dict, tensors: np.ndarray) -> list[str]:
-    """Reference-shaped tensor API over recognize_ink's math."""
-    logits = md.recognize_forward(params, tensors)
-    probs = cs.softmax(logits)
-    return cs.decode_probs(probs)
 
 
 def image_to_data(image_rgb: np.ndarray, params: dict) -> list[dict]:
@@ -195,6 +178,30 @@ def assemble_reading_order(spans: list[dict]) -> str:
         if t:
             parts.append(t)
     return "\n".join(parts)
+
+
+def recognize_pages(det, params: dict) -> list[tuple[list[dict], str]]:
+    """Recognition half for a batch of detected pages: ``det`` is
+    detect_pages' list of (boxes, swapped_image). ALL crops of ALL pages go
+    through ONE crops_to_ink + recognize_ink pass (strictly more vectorized
+    than the reference's chunk-of-4 + 6-thread pool, tuatara.cpp:450-475);
+    returns (spans, reading-order text) per page, in input order — the
+    same output as extract_page on each page."""
+    crops_flat: list[np.ndarray] = []
+    counts: list[int] = []
+    for boxes, swapped in det:
+        crops = crop_regions(swapped, boxes)
+        crops_flat.extend(crops)
+        counts.append(len(crops))
+    texts = recognize_ink(params, crops_to_ink(crops_flat, params))
+    out = []
+    pos = 0
+    for (boxes, _), cnt in zip(det, counts):
+        spans = [{"text": t, "bbox": g.rect_to_tesseract_bbox(b).tolist()}
+                 for t, b in zip(texts[pos:pos + cnt], boxes)]
+        pos += cnt
+        out.append((spans, assemble_reading_order(spans)))
+    return out
 
 
 def extract_page(image_rgb: np.ndarray, params: dict) -> dict:
